@@ -37,6 +37,7 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -213,6 +214,28 @@ def _build_stress_dir(spark, sf_dir: str, factor: int) -> str:
     return stress
 
 
+def time_best(spark, build, sf_dir: str, repeats: int = 2) -> tuple[float, int]:
+    """Best-of-``repeats`` wall seconds of ``build(spark, sf_dir).count()``
+    (unrounded) and the last run's row count. The one build-and-time loop
+    behind bench.py and tools/: the first execution of a multi-join plan
+    pays one-time whole-stage-codegen compilation (measured ~2x on the
+    6-join TPC-H shapes), so the minimum is the steady-state plan cost."""
+    best, rows = float("inf"), 0
+    for _ in range(repeats):
+        t0 = time.time()
+        rows = build(spark, sf_dir).count()
+        best = min(best, time.time() - t0)
+    return best, rows
+
+
+def _session(app_name: str):
+    from syntheticdata_pipeline__spark.session import get_spark
+
+    spark = get_spark(app_name)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def _fresh_process_best(name: str, sf_dir: str, repeats: int = 2) -> float | None:
     """Best-of-``repeats`` in a truly fresh PROCESS (cold JVM via
     tools/time_queries.py). r15 measurement-bug fix (documented in
@@ -253,15 +276,19 @@ def _confirm_regressions(
 ) -> list[str]:
     """Fresh confirmation of would-be 2x gate breaches: only a breach
     that REPRODUCES outside the warm session counts. Since r15 the
-    recheck runs in a fresh PROCESS (cold JVM) when a live session is
-    passed (``spark is not None``); on any subprocess failure it falls
-    back to the in-(re)started-session loop, which is also the path the
-    methodology tests drive directly. The fresh best-of-2 replaces the
-    in-context timing/ratio and both values are recorded in ``recheck``
-    for provenance; returns the confirmed subset. Tested in
+    recheck runs in a fresh PROCESS (cold JVM) unless ``spark`` is None;
+    on any subprocess failure it falls back to an in-process best-of-2,
+    which is also the path the methodology tests drive directly.
+    ``spark`` is a session or a zero-argument function that opens one:
+    main() passes a function, so no idle JVM competes with the cold-JVM
+    subprocess and a session exists only while a fallback needs it (it
+    is stopped on return). The fresh best-of-2 replaces the in-context
+    timing/ratio and both values are recorded in ``recheck`` for
+    provenance; returns the confirmed subset. Tested in
     tests/test_bench_reclaim.py."""
     sf_dir = sf_dir or SF_DIR
     confirmed = []
+    opened = None
     for name in candidates:
         if spark is not None:
             fresh = _fresh_process_best(name, sf_dir)
@@ -288,12 +315,9 @@ def _confirm_regressions(
         # bench line (r10 ADVICE): keep the in-context breach as confirmed
         # — the conservative reading — and record the error for triage.
         try:
-            best = None
-            for _ in range(2):
-                t0 = time.time()
-                registry[name].build(spark, sf_dir).count()
-                sec = time.time() - t0
-                best = sec if best is None else min(best, sec)
+            if callable(spark):
+                spark = opened = spark()
+            best, _ = time_best(spark, registry[name].build, sf_dir)
         except Exception as e:
             recheck[name] = {
                 "in_context_sec": timings[name],
@@ -319,34 +343,27 @@ def _confirm_regressions(
             f" ({'CONFIRMED regression' if ratio > 2.0 else 'in-context noise'})",
             file=sys.stderr,
         )
+    if opened is not None:
+        opened.stop()
     return confirmed
 
 
 def main() -> None:
     from syntheticdata_pipeline__spark.plans import load_all
-    from syntheticdata_pipeline__spark.session import get_spark
 
     registry = load_all()
     bench_queries = {n: s for n, s in registry.items() if s.bench}
 
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("bench")
 
     # Warm-up: JVM + codegen + parquet footer caches.
     bench_queries[next(iter(bench_queries))].build(spark, SF_DIR).count()
 
-    # best-of-2 per query: the first execution of a multi-join plan pays
-    # one-time whole-stage-codegen compilation (measured ~2x on the 6-join
-    # TPC-H shapes); the gate targets steady-state plan cost, not the
-    # codegen lottery, so each query runs twice and keeps the minimum.
+    # best-of-2 per query: the gate targets steady-state plan cost, not
+    # the codegen lottery (see time_best).
     timings: dict[str, float] = {}
     for name in sorted(bench_queries):
-        best, n = None, 0
-        for _ in range(2):
-            t0 = time.time()
-            n = bench_queries[name].build(spark, SF_DIR).count()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
+        best, n = time_best(spark, bench_queries[name].build, SF_DIR)
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
 
@@ -378,14 +395,15 @@ def main() -> None:
     # a forced System.gc() between queries does not cure it). The 2x
     # gate is about plan shape, so a breach only counts if a fresh
     # session reproduces it; the recheck value replaces the in-context
-    # one and is recorded under "recheck" for provenance.
+    # one and is recorded under "recheck" for provenance. The main
+    # session stops first; a recheck session opens only if a fresh-process
+    # run fails and the in-process fallback needs one.
     recheck: dict[str, dict] = {}
     if regressions:
         spark.stop()
-        spark = get_spark("bench-recheck")
-        spark.sparkContext.setLogLevel("ERROR")
         regressions = _confirm_regressions(
-            spark, registry, regressions, baseline, timings, vs_baseline, recheck
+            partial(_session, "bench-recheck"),
+            registry, regressions, baseline, timings, vs_baseline, recheck,
         )
 
     stress: dict = {}
@@ -403,18 +421,12 @@ def main() -> None:
             # inside the same fresh session: base_sec at SF_DIR first,
             # then the replicated runs.
             spark.stop()
-            spark = get_spark("bench-stress")
-            spark.sparkContext.setLogLevel("ERROR")
+            spark = _session("bench-stress")
             stress_base: dict[str, float] = {}
 
             def fresh_base(name: str) -> float:
                 if name not in stress_base:
-                    best = None
-                    for _ in range(2):
-                        t0 = time.time()
-                        registry[name].build(spark, SF_DIR).count()
-                        sec = time.time() - t0
-                        best = sec if best is None else min(best, sec)
+                    best, _ = time_best(spark, registry[name].build, SF_DIR)
                     stress_base[name] = round(best, 3)
                 return stress_base[name]
 
@@ -424,12 +436,7 @@ def main() -> None:
             # FASTER than its 10x point).
             def stress_run(name: str, factor: int, vs_10x_key: str | None = None):
                 sdir = _build_stress_dir(spark, SF_DIR, factor)
-                best, n = None, 0
-                for _ in range(2):
-                    t0 = time.time()
-                    n = registry[name].build(spark, sdir).count()
-                    sec = time.time() - t0
-                    best = sec if best is None else min(best, sec)
+                best, n = time_best(spark, registry[name].build, sdir)
                 sec = round(best, 3)
                 base = fresh_base(name)
                 rec = {

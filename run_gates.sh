@@ -24,6 +24,14 @@ if ! python -m pytest tests/ -x -q; then
   fail=1
 fi
 
+echo "== gate 1b: perfbench tests =="
+# perfbench/ loads tools/check_oracle.py by path, so an edit under tools/
+# can break the benchmark without touching perfbench/ itself.
+if ! python -m pytest perfbench/tests -q; then
+  echo "GATE FAIL: perfbench tests" >&2
+  fail=1
+fi
+
 if [ "$MODE" = "full" ]; then
   echo "== gate 2: oracle parity (driver replica, sf0.01) =="
   # SELFCHECK.json is the committed full-catalog twin of the driver's

@@ -107,7 +107,12 @@ def collapse_identical_sets(
     if two distinct arrays matched both joins, some position would be a
     boundary in one array but element content in the other, and that one
     content byte would have to equal \\x01 (to match join 1) and \\x02
-    (to match join 2) simultaneously. Two codegen'd concat+md5 passes —
+    (to match join 2) simultaneously. Precondition: that holds only for
+    NON-EMPTY arrays with NO NULL elements — concat_ws skips NULLs and
+    renders [] and [''] alike as '', so [] collides with [''] and arrays
+    that differ only by NULLs collide too. Callers must keep such rows
+    out (folding array size and NULL count into the key is the open
+    fix). Two codegen'd concat+md5 passes —
     measured cheaper than any per-element (higher-order-function)
     encoding, which at sf0.1 cost +15–30% on the collapse queries. With
     ``ordered=True`` elements are fingerprinted in array order (SEQUENCE

@@ -216,3 +216,74 @@ def test_recheck_prefers_fresh_process_and_falls_back(monkeypatch):
     # the fallback path ran in-process and cleared the breach
     assert recheck["fallback_q"]["fresh_sec"] == 0.5
     assert "fresh_process" not in recheck["fallback_q"]
+
+
+class _RowsDF:
+    def __init__(self, n):
+        self._n = n
+
+    def count(self):
+        return self._n
+
+
+def test_time_best_returns_min_of_repeats_and_last_rows(monkeypatch):
+    """The SPARK_GRAFT_REPEATS path of tools/time_queries.py: with
+    repeats=3, time_best runs the build three times and returns the
+    unrounded minimum and the LAST run's row count."""
+    import bench
+
+    clock = _FakeClock([0.0, 2.0, 10.0, 10.5, 20.0, 20.75])
+    monkeypatch.setattr(bench, "time", clock)
+    rows = iter([7, 8, 9])
+
+    best, n = bench.time_best(
+        None, lambda spark, sf_dir: _RowsDF(next(rows)), "/nonexistent", repeats=3
+    )
+
+    assert best == 0.5  # the middle run: neither the first nor the last
+    assert n == 9
+    assert clock._values == []  # exactly three timed runs
+
+
+class _StubSession:
+    stopped = False
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_recheck_opens_a_session_only_for_the_fallback(monkeypatch):
+    """main() stops its session before the rechecks and passes a function
+    that opens one: no JVM idles beside the cold-JVM subprocess, a
+    session opens only when the in-process fallback runs, and it is
+    stopped before _confirm_regressions returns."""
+    import bench
+
+    opened: list[_StubSession] = []
+
+    def open_session():
+        opened.append(_StubSession())
+        return opened[-1]
+
+    def fake_fresh(name, sf_dir, repeats=2):
+        return 2.4 if name == "proc_q" else None
+
+    monkeypatch.setattr(bench, "_fresh_process_best", fake_fresh)
+    monkeypatch.setattr(bench, "time", _FakeClock([0.0, 0.5, 10.0, 10.7]))
+
+    def recheck(candidates):
+        return bench._confirm_regressions(
+            spark=open_session,
+            registry={"proc_q": _FakeSpec(), "fallback_q": _FakeSpec()},
+            candidates=candidates,
+            baseline={"proc_q": 1.0, "fallback_q": 1.0},
+            timings={"proc_q": 3.0, "fallback_q": 3.0},
+            vs_baseline={"proc_q": 3.0, "fallback_q": 3.0},
+            recheck={},
+            sf_dir="/nonexistent",
+        )
+
+    assert recheck(["proc_q"]) == ["proc_q"]
+    assert opened == []  # every candidate rechecked in a fresh process
+    assert recheck(["proc_q", "fallback_q"]) == ["proc_q"]
+    assert len(opened) == 1 and opened[0].stopped

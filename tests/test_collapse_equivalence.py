@@ -66,10 +66,11 @@ def test_simhash_collapse_equivalence(dup_corpus):
 
 def test_separator_in_element_never_collides(spark):
     """r15 (r14 ADVICE high): a \\x01 INSIDE a token must not make two
-    distinct sets fingerprint identically. Before the length-prefixed
-    encoding, {'abcd\\x01efgh'} and {'abcd','efgh'} encoded to the same
-    md5, collapsed into one group, and emitted a phantom jac=1.0 pair
-    the base equi-join can never produce."""
+    distinct sets fingerprint identically. Before the double-separator
+    key (md5 of the \\x01-join ‖ md5 of the \\x02-join),
+    {'abcd\\x01efgh'} and {'abcd','efgh'} encoded to the same md5,
+    collapsed into one group, and emitted a phantom jac=1.0 pair the
+    base equi-join can never produce."""
     from pyspark.sql import functions as F
 
     from syntheticdata_pipeline__spark.operators.neardup import (

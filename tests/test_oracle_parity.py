@@ -1,14 +1,14 @@
-"""Every catalog query must hash-match its DuckDB oracle at sf0.001
-(the driver repeats this at sf0.01 — same comparison)."""
+"""Every catalog query must match its DuckDB oracle at sf0.001 through
+tools/check_oracle.compare_one — the round-end gate's own comparator
+(Arrow fetch, Decimal tagging, type-class check), so pytest and the gate
+cannot disagree (the external correctness run repeats this at sf0.01)."""
 
 from __future__ import annotations
-
-import hashlib
-import math
 
 import pytest
 
 from syntheticdata_pipeline__spark.plans import load_all
+from tools.check_oracle import compare_one
 
 from .conftest import SF_SMOKE
 
@@ -16,39 +16,12 @@ pytestmark = pytest.mark.slow  # deep battery: default run skips;
 # SPARK_GRAFT_FULL_TESTS=1 (run_gates.sh full) runs it (r15 suite split)
 
 REGISTRY = load_all()
-
-
-def _norm(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
-def _hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(_norm(r[i]) for i in order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest(), len(rows)
+BUILDS = {n: s.build for n, s in REGISTRY.items()}
+ORACLES = {n: s.oracle for n, s in REGISTRY.items() if s.oracle is not None}
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(name, spark, duck):
-    spec = REGISTRY[name]
-    sdf = spec.build(spark, SF_SMOKE)
-    srows = [tuple(r) for r in sdf.collect()]
-    shash, sn = _hash(sdf.columns, srows)
-    if spec.oracle is None:
-        assert sn >= 0  # rows-only check
-        return
-    res = duck.execute(spec.oracle)
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    dhash, dn = _hash(dcols, drows)
-    assert sorted(sdf.columns) == sorted(dcols), "column names differ"
-    assert sn == dn, f"row count differs: spark={sn} duck={dn}"
-    assert shash == dhash, f"value hash differs ({sn} rows)"
+    ok = compare_one(spark, duck, name, BUILDS, ORACLES, sf_dir=SF_SMOKE)
+    # PASS is True; a query without an oracle is a rows-only check (None)
+    assert ok is (True if name in ORACLES else None), "see the verdict line above"

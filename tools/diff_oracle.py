@@ -5,8 +5,10 @@ Usage::
     python tools/diff_oracle.py SF_DIR query [query ...]
 
 Prints the rows present on only one side (after check_oracle's value
-normalization), capped at 20 per side — the triage companion to
-tools/check_oracle.py, which only reports the hash mismatch.
+normalization, with DuckDB rows fetched through Arrow by ``fetch_duck``
+so triage sees the same values the gate hashes), capped at 20 per side
+— the triage companion to tools/check_oracle.py, which only reports the
+hash mismatch.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.check_oracle import duck_connect, norm_value  # noqa: E402
+from tools.check_oracle import duck_connect, fetch_duck, norm_value  # noqa: E402
 
 
 def rows_of(cols, rows):
@@ -43,8 +45,7 @@ def main() -> int:
         spec = registry[name]
         sdf = spec.build(spark, sf_dir)
         scols, srows = rows_of(sdf.columns, sdf.collect())
-        rel = con.execute(spec.oracle)
-        dcols, drows = rows_of([d[0] for d in rel.description], rel.fetchall())
+        dcols, drows = rows_of(*fetch_duck(con.execute(spec.oracle))[:2])
         print(f"== {name}: spark cols {scols}")
         print(f"==        duck  cols {dcols}")
         sset, dset = set(srows), set(drows)

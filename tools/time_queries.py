@@ -1,5 +1,6 @@
 """Time individual catalog queries with the bench methodology (warm
-session, best-of-2 ``.count()``) for fast optimization iteration.
+session, best-of-2 ``.count()`` through ``bench.time_best``) for fast
+optimization iteration.
 
 Usage::
 
@@ -16,37 +17,29 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402  (time_best + SF_DIR)
+
 REPEATS = int(os.environ.get("SPARK_GRAFT_REPEATS", "2"))
 
 
 def main() -> None:
     from syntheticdata_pipeline__spark.plans import load_all
-    from syntheticdata_pipeline__spark.session import get_spark
 
     names = sys.argv[1:]
     if not names:
         print("usage: time_queries.py <query> [query ...]", file=sys.stderr)
         sys.exit(2)
     registry = load_all()
-    spark = get_spark("time-queries")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench._session("time-queries")
     # Warm-up: JVM + codegen + parquet footer caches (same as bench.py).
-    registry[names[0]].build(spark, SF_DIR).count()
+    registry[names[0]].build(spark, bench.SF_DIR).count()
 
     out: dict[str, float] = {}
     for name in names:
-        spec = registry[name]
-        best, n = None, 0
-        for _ in range(REPEATS):
-            t0 = time.time()
-            n = spec.build(spark, SF_DIR).count()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
+        best, n = bench.time_best(spark, registry[name].build, bench.SF_DIR, REPEATS)
         out[name] = round(best, 3)
         print(f"# {name}: {best:.3f}s rows={n}", file=sys.stderr)
     print(json.dumps(out))
