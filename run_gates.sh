@@ -32,6 +32,15 @@ if ! python -m pytest perfbench/tests -q; then
   fail=1
 fi
 
+echo "== gate 1c: chunked incremental dedup associativity (sf0.001) =="
+# ~50 s on 4 cores: two chunks through StateTable.append and compact(),
+# exits 1 when the chunked survivors differ from the one-shot run.
+if ! SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
+     python tools/deep_query_point.py incremental_dedup_survivors 2 --chunks 2; then
+  echo "GATE FAIL: chunked incremental dedup" >&2
+  fail=1
+fi
+
 if [ "$MODE" = "full" ]; then
   echo "== gate 2: oracle parity (driver replica, sf0.01) =="
   # SELFCHECK.json is the committed full-catalog twin of the driver's

@@ -902,4 +902,6 @@ def incremental_minhash_dedup(
     survivors = batch.join(
         dup_ids.withColumnRenamed("id", id_col), [id_col], "left_anti"
     )
-    return survivors, sigs
+    # the pinned frame, not ``sigs``: appending the latter to the state
+    # would run the signature stage a second time
+    return survivors, keyed.select("id", "sig")

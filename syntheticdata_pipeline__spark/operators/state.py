@@ -16,10 +16,9 @@ file count — the reference's unbounded in-memory set simply can't scale.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.readers import path_exists, swap_in_parquet
 
 
 class StateTable:
@@ -48,10 +47,7 @@ class StateTable:
 
     # -- reads ---------------------------------------------------------------
     def exists(self) -> bool:
-        sc = self.spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(self.path)  # type: ignore[union-attr]
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-        return bool(fs.exists(hpath))
+        return path_exists(self.spark, self.path)
 
     def load(self) -> DataFrame:
         """Current state keys (+ payload), deduped across appends."""
@@ -80,20 +76,15 @@ class StateTable:
         )
 
     def compact(self) -> None:
-        """Rewrite accumulated appends as a single deduped snapshot."""
+        """Rewrite accumulated appends as a single deduped snapshot,
+        committed by ``swap_in_parquet``: a failed write leaves the
+        appends as they were."""
         if not self.exists():
             return
         snapshot = self.load()
-        tmp = os.path.join(os.path.dirname(self.path.rstrip("/")), f".compact-{uuid.uuid4().hex}")
-        snapshot.coalesce(max(1, snapshot.rdd.getNumPartitions() // 8)).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        reread = self.spark.read.parquet(tmp)
-        reread.write.mode("overwrite").parquet(self.path)
-        sc = self.spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(tmp)  # type: ignore[union-attr]
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-        fs.delete(hpath, True)
+        swap_in_parquet(
+            snapshot.coalesce(max(1, snapshot.rdd.getNumPartitions() // 8)), self.path
+        )
 
     # -- the resume operator -----------------------------------------------------
     def filter_new(self, work: DataFrame) -> DataFrame:

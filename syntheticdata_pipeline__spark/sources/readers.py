@@ -9,6 +9,7 @@ and qwen_vl_processor.py:177-187).
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -188,6 +189,54 @@ def write_text_rendered(df: DataFrame, text_col: str, path: str) -> None:
     df.select(F.col(text_col).alias("value")).write.mode("overwrite").text(path)
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` under the session's Hadoop conf."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath  # type: ignore[union-attr]
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _hadoop_path(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def swap_in_parquet(df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``df`` in one write.
+
+    ``df`` is written as flat parquet into the sibling
+    ``<path>.staging-<uuid>``; then the live table is renamed aside, the
+    staged one renamed to ``path`` and the old one deleted. ``df`` may
+    read ``path`` itself, because nothing there changes until the write
+    has finished. A write that fails deletes the staging directory and
+    re-raises, leaving the live table as it was.
+
+    The crash window is the two renames: a process that dies between
+    them leaves no table at ``path`` and the previous one at
+    ``<path>.aside-<uuid>``. On a local or HDFS path a rename is a
+    metadata operation; on ``s3a`` it copies every object of the table.
+    """
+    fs, live = _hadoop_path(df.sparkSession, path)
+    tag = uuid.uuid4().hex
+    staged, aside = live.suffix(f".staging-{tag}"), live.suffix(f".aside-{tag}")
+    try:
+        df.write.parquet(staged.toString())
+    except BaseException:
+        fs.delete(staged, True)
+        raise
+    had_live = fs.exists(live)
+    if had_live and not fs.rename(live, aside):
+        fs.delete(staged, True)
+        raise OSError(f"could not move {live} aside for the swap")
+    if not fs.rename(staged, live):
+        if had_live:
+            fs.rename(aside, live)
+        fs.delete(staged, True)
+        raise OSError(f"could not rename the staged table to {live}")
+    if had_live:
+        fs.delete(aside, True)
+
+
 def write_keyed_overwrite(
     df: DataFrame,
     path: str,
@@ -202,45 +251,49 @@ def write_keyed_overwrite(
     any_scraper.py:776).
 
     The reference's overwrite is per KEY (one file per product_id), so
-    ``upsert=True`` (default) merges at key granularity: rows already in
-    a touched bucket whose key is NOT in the batch are carried forward
-    (null-safe key compare, so a NULL-key row is replaced by a NULL-key
-    batch row, not duplicated). The merge reads only the buckets the
-    batch touches — the broadcast semi-join on the partition column
-    triggers dynamic partition pruning, so untouched buckets are never
-    scanned, and dynamic partition overwrite leaves them on disk
-    untouched. This is the copy-on-write merge a log-structured table
-    format would do, expressed on plain partitioned parquet.
+    ``upsert=True`` (default) merges at key granularity: stored rows
+    whose key is NOT in the batch are carried forward (null-safe key
+    compare, so a NULL-key row is replaced by a NULL-key batch row, not
+    duplicated). ``upsert=False`` replaces whole buckets: stored rows
+    whose ``__bucket`` the batch touches are dropped, so a REPLAYED
+    batch cannot duplicate, but a PARTIAL batch loses its buckets'
+    other keys — only safe when every batch re-emits full rows for all
+    buckets it touches (the pre-round-11 contract).
 
-    ``upsert=False`` is the pure retry fast path (no read): a REPLAYED
-    batch cannot duplicate, but a PARTIAL batch then replaces its
-    buckets wholesale — only safe when every batch re-emits full rows
-    for all buckets it touches (the pre-round-11 contract).
+    ``__bucket = hash_bucket(key, n_buckets)`` is a data column of a
+    flat table, not a directory level. Bucket directories would let a
+    merge skip untouched buckets, but a batch of N keys touches a share
+    1−(63/64)^N of 64 buckets: 84% at 120 keys, 98% at 256. On 4 cores,
+    writing 343 rows as 64 bucket directories took 1.9 s warm against
+    0.2 s flat, and reading them back 1.1 s against 0.2 s.
+
+    The batch is pinned once, merged with the stored rows and the whole
+    table is committed by ``swap_in_parquet``: a failed write leaves the
+    previous table readable, and the crash window is its two renames.
+    On ``s3a``, where a rename copies every object, each commit
+    therefore copies the whole table; dynamic overwrite of bucket
+    directories copied only the touched buckets. "First write" means
+    ``path`` does not exist; a table that exists but cannot be read
+    raises rather than being replaced by the batch alone.
     """
     from ..functions.determinism import hash_bucket
 
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = df.withColumn("__bucket", hash_bucket(F.col(key_col), n_buckets))
-    if upsert:
-        try:
-            existing = spark.read.parquet(path)
-        except Exception:
-            existing = None  # first write: nothing to merge
-        if existing is not None:
-            touched = out.select("__bucket").distinct()
-            pruned = existing.join(F.broadcast(touched), "__bucket", "left_semi")
+    if path_exists(spark, path):
+        existing = spark.read.parquet(path)
+        out = out.localCheckpoint(eager=True)
+        if upsert:
             batch_keys = out.select(key_col).distinct()
-            keep = pruned.join(
+            keep = existing.join(
                 batch_keys,
-                pruned[key_col].eqNullSafe(batch_keys[key_col]),
+                existing[key_col].eqNullSafe(batch_keys[key_col]),
                 "left_anti",
             )
-            # materialize BEFORE the write: overwriting a path while a
-            # lazy plan still reads it is rejected by Spark, and lazy
-            # evaluation during the overwrite would race the deletes
-            out = keep.unionByName(out).localCheckpoint(eager=True)
-    out.write.mode("overwrite").partitionBy("__bucket").parquet(path)
+        else:
+            keep = existing.join(out.select("__bucket").distinct(), "__bucket", "left_anti")
+        out = keep.unionByName(out)
+    swap_in_parquet(out, path)
 
 
 def write_summary_json(df: DataFrame, path: str) -> None:

@@ -3,9 +3,9 @@ K1/K5 sinks under hostile KEY DATA and retry/rerun interleavings. The
 partition-VALUE escaping battery lives in test_sink_adversarial.py; this
 file covers the seams that battery never hit:
 
-- hostile keys flowing through ``write_keyed_overwrite`` (keys are
-  parquet DATA there — only the md5-derived ``__bucket`` becomes a
-  directory name — so NUL bytes, 10-KB keys, unicode, the Hive
+- hostile keys flowing through ``write_keyed_overwrite`` (keys and
+  the md5-derived ``__bucket`` are parquet DATA there, never path
+  components, so NUL bytes, 10-KB keys, unicode, the Hive
   sentinel, and path metacharacters must all round-trip byte-identical
   AND merge per-key on upsert);
 - rerun/retry interleavings of ``write_keyed_overwrite``: replay,
